@@ -89,7 +89,13 @@ object ZoneMap {
     * min (prefix) / incremented max cannot be told apart from exact
     * values in the footer; pruning would stay safe (bounds only
     * widen) but the footer≡job exact-equivalence contract would not
-    * hold for such dirs. */
+    * hold for such dirs.
+    *
+    * Either path also records the dir's schema in [[graft.SchemaCache]]
+    * (from the first footer it opens, or from the job path's own
+    * inference), so its first merge-on-read runs no inference job —
+    * which makes `dir` IMMUTABLE from here on: call this only on a
+    * fully-written, nonce-named Tx dir. */
   def write(spark: SparkSession, dir: String, keyCols: Seq[String]): Unit = {
     if (footerWrite(spark, dir, keyCols)) return
     writeViaJob(spark, dir, keyCols)
@@ -118,6 +124,10 @@ object ZoneMap {
         val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
         try r.getFooter finally r.close()
       } catch { case _: Exception => return false }
+      // every file of one write carries the same schema: the first
+      // footer primes the dir's SchemaCache entry
+      if (f == files.head)
+        graft.SchemaCache.primeFromFooter(dir, footer.getFileMetaData.getKeyValueMetaData)
       val md = footer.getBlocks
       val schema = footer.getFileMetaData.getSchema
       val rows = md.asScala.map(_.getRowCount).sum
@@ -209,7 +219,7 @@ object ZoneMap {
   }
 
   private[graft] def writeViaJob(spark: SparkSession, dir: String, keyCols: Seq[String]): Unit = {
-    val df = spark.read.parquet(dir)
+    val df = graft.SchemaCache.read(spark, dir)
     val usable = keyCols.filter(c => df.schema.fields.exists(f =>
       f.name == c && kindOf(f.dataType).isDefined))
     val kinds = usable.map(c => c ->

@@ -37,7 +37,7 @@ class ProjectedReadSpec extends SparkSpec {
     val narrow = PkTableSink.readTxCols(spark, root, Seq("id", "ca"))
     val reads = narrow.queryExecution.executedPlan.toString
       .linesIterator.filter(_.contains("ReadSchema")).toSeq
-    assert(reads.size == 2, s"expected 2 scans:\n${reads.mkString("\n")}")
+    assert(reads.size == 1, s"expected one scan of all layers:\n${reads.mkString("\n")}")
     reads.foreach { r =>
       assert(r.contains("id:") && r.contains("ver:") && r.contains("ca:"),
         s"required columns missing from scan: $r")

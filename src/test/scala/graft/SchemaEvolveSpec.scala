@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.sinks.{PkTableSink, TxLog}
 
 /** D30: lake-table schema evolution — a widening commit adds columns
@@ -77,5 +79,55 @@ class SchemaEvolveSpec extends SparkSpec {
         Seq("id"), Seq("ver"), "del", writer = "w")
     }
     assert(e.getMessage.contains("score"))
+  }
+
+  private def assertSame(what: String, got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema == want.schema, s"$what schema:\n${got.schema}\nvs\n${want.schema}")
+    assert(got.collect().toSet == want.collect().toSet, s"$what rows differ")
+  }
+
+  test("pruned reads of a widened table keep every layer's columns") {
+    val root = freshRoot()
+    PkTableSink.mergeTx(spark, root,
+      (0L until 50L).map(i => (i, 1L, s"v$i", false)).toDF("id", "ver", "v", "del"),
+      Seq("id"), Seq("ver"), "del", writer = "w")
+    PkTableSink.mergeTx(spark, root,
+      Seq((100L, 1L, "n", "emea", false), (101L, 1L, "m", "apac", false))
+        .toDF("id", "ver", "v", "region", "del"),
+      Seq("id"), Seq("ver"), "del", writer = "w")
+    val all = PkTableSink.readTx(spark, root, spark.emptyDataFrame)
+    assert(all.columns.toSeq == Seq("id", "ver", "v", "region"))
+    def range(lo: Long, hi: Long) = all.where(col("id").between(lo, hi))
+    assertSame("range over both layers",
+      PkTableSink.readTxRange(spark, root, spark.emptyDataFrame, 40L, 100L), range(40L, 100L))
+    // zone pruning keeps only the base: the delta's column must survive
+    assertSame("base-only range",
+      PkTableSink.readTxRange(spark, root, spark.emptyDataFrame, 10L, 20L), range(10L, 20L))
+    assertSame("base-only point",
+      PkTableSink.readTxPointOn(spark, root, spark.emptyDataFrame, "id", "20"),
+      all.where(col("id") === 20L))
+    assertSame("empty range",
+      PkTableSink.readTxRange(spark, root, spark.emptyDataFrame, 500L, 600L), range(500L, 600L))
+  }
+
+  test("a column committed as int, later as long, reads back as long") {
+    val root = freshRoot()
+    PkTableSink.mergeTx(spark, root,
+      (0L until 20L).map(i => (i, 1L, i.toInt, false)).toDF("id", "ver", "score", "del"),
+      Seq("id"), Seq("ver"), "del", writer = "w")
+    PkTableSink.mergeTx(spark, root,
+      Seq((5L, 2L, 5000000000L, false), (30L, 1L, 7L, false)).toDF("id", "ver", "score", "del"),
+      Seq("id"), Seq("ver"), "del", writer = "w")
+    val want = (0L until 20L).map(i => i -> i).toMap + (5L -> 5000000000L) + (30L -> 7L)
+    def scores(df: DataFrame) = {
+      assert(df.schema("score").dataType == LongType, s"score widened to long: ${df.schema}")
+      df.select(col("id"), col("score")).as[(Long, Long)].collect().toMap
+    }
+    assert(scores(PkTableSink.readTx(spark, root, spark.emptyDataFrame)) == want)
+    assert(scores(PkTableSink.readTxRange(spark, root, spark.emptyDataFrame, 0L, 30L)) == want)
+    assert(scores(PkTableSink.readTxPointOn(spark, root, spark.emptyDataFrame, "id", "5")) ==
+      Map(5L -> 5000000000L))
+    PkTableSink.compactTx(spark, root, writer = "w")
+    assert(scores(PkTableSink.readTx(spark, root, spark.emptyDataFrame)) == want)
   }
 }

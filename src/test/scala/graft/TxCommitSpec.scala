@@ -457,4 +457,24 @@ class TxCommitSpec extends SparkSpec {
     assert(!dirs().exists(_.startsWith("t0-")) && !dirs().exists(_.startsWith("d")))
     assert(PkTableSink.readTx(spark, root, batch().drop("del")).count() == 4L)
   }
+
+  test("tx: among equal versions of a key the later commit wins on every read path") {
+    val root = tmpRoot("txorder")
+    // five layers all carrying (id, ver = 1): only the commit order can
+    // pick the winner, so a null or mis-mapped layer index shows here
+    (0 to 4).foreach(c =>
+      PkTableSink.mergeTx(spark, root,
+        batch((0L until 10L).map(i => (i, 1L, s"c$c", false)): _*),
+        Seq("id"), Seq("ver"), "del", writer = "w1"))
+    assert(TxLog.current(spark, root).get.deltas.size == 4)
+    def values(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), col("v")).as[(Long, String)].collect().toMap
+    val last = (0L until 10L).map(_ -> "c4").toMap
+    def empty = batch().drop("del")
+    assert(values(PkTableSink.readTx(spark, root, empty)) == last)
+    assert(values(PkTableSink.readTxRange(spark, root, empty, 0L, 9L)) == last)
+    assert(values(PkTableSink.readTxPointOn(spark, root, empty, "id", "3")) == Map(3L -> "c4"))
+    PkTableSink.compactTx(spark, root, writer = "w1")
+    assert(values(PkTableSink.readTx(spark, root, empty)) == last)
+  }
 }
